@@ -53,7 +53,8 @@ object Graft {
     * (or tenants) in a long-lived session to return executor storage.
     */
   def releaseCaches(spark: SparkSession): Unit = {
-    Metrics.unpersistEvents(spark)
+    val released = Metrics.unpersistEvents(spark) ++
+      graft.promql.Compiler.unpersistInstants(spark)
     Corpus.unpersistShingles(spark)
     graft.operators.Dedup.unpersistSignatures(spark)
     graft.operators.Dedup.unpersistPairs(spark)
@@ -64,8 +65,8 @@ object Graft {
     graft.operators.Similarity.unpersistKmeans(spark)
     graft.operators.Similarity.unpersistPq(spark)
     graft.operators.Multimodal.unpersistPhashPairs(spark)
-    graft.promql.Compiler.unpersistInstants(spark)
     graft.operators.TextAnalysis.unpersistBpe(spark)
+    graft.operators.Classifier.unpersistFeatures(spark)
     // The iteration operators (x27 component propagation, x37
     // converged k-means, the BPE training rounds) truncate lineage
     // with localCheckpoint; those blocks belong to no registry above,
@@ -74,5 +75,8 @@ object Graft {
     // to zero after release.
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+    // those dirs rebuild their relations on next use: results cached
+    // against the released ones must not stay reachable
+    released.foreach(graft.promql.ResultsCache.invalidate(spark, _))
   }
 }

@@ -95,6 +95,13 @@ object Classifier {
       featuresUncached(spark, dir).cutLineage()
     })
 
+  /** Drop this session's feature relations: their checkpoint blocks go
+    * with [[graft.Graft.releaseCaches]]'s persistent-RDD sweep, and a
+    * kept reference would then fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+    */
+  def unpersistFeatures(spark: SparkSession): Unit =
+    featuresCache.keySet.removeIf(_._1 eq spark)
+
   private def featuresUncached(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
       .filter(col("text").isNotNull && length(col("text")) >= 1)

@@ -79,14 +79,16 @@ object Metrics {
   /** Release every cached adapter view of `spark` (long-lived sessions
     * that cycle through many sf dirs — notebooks, services — call this
     * between corpora; the short-lived Verify/Bench mains just stop the
-    * session, which drops the blocks with the executor).
+    * session, which drops the blocks with the executor). Returns the
+    * dirs whose view was released.
     */
-  def unpersistEvents(spark: SparkSession): Unit = {
+  def unpersistEvents(spark: SparkSession): Set[String] = {
     import scala.jdk.CollectionConverters._
-    eventsCache.keySet.asScala.filter(_._1 eq spark).foreach { k =>
+    eventsCache.keySet.asScala.filter(_._1 eq spark).map { k =>
       Option(eventsCache.remove(k)).foreach(_.unpersist())
       markersCache.remove(k)
-    }
+      k._2
+    }.toSet
   }
 
   /** The physical half of `clean_tombstones`

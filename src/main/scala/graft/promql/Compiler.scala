@@ -761,16 +761,16 @@ object Compiler {
 
   /** Drop this session's cached evaluation-instant aggregates (the
     * manual analog of the application-end eviction; see
-    * [[graft.Graft.releaseCaches]]).
+    * [[graft.Graft.releaseCaches]]). Returns the dirs released.
     */
-  def unpersistInstants(spark: SparkSession): Unit = {
+  def unpersistInstants(spark: SparkSession): Set[String] = {
     import scala.jdk.CollectionConverters._
-    instantCache.keySet.asScala.filter(_._1 eq spark).foreach { k =>
-      Option(instantCache.remove(k)).foreach(_.unpersist())
-    }
-    minInstantCache.keySet.asScala.filter(_._1 eq spark).foreach { k =>
-      Option(minInstantCache.remove(k)).foreach(_.unpersist())
-    }
+    Seq(instantCache, minInstantCache).flatMap { cache =>
+      cache.keySet.asScala.filter(_._1 eq spark).map { k =>
+        Option(cache.remove(k)).foreach(_.unpersist())
+        k._2
+      }
+    }.toSet
   }
 
   /** Silver-table swap (SURVEY §8): seed the 1-row eval-instant cache

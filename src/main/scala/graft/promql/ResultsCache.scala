@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The query-frontend RESULTS CACHE for `query_range` — the split+cache
   * tier Cortex/Thanos put in front of a Prometheus: a range query
-  * splits into fixed-width chunks of its instant grid, each COMPLETE
-  * chunk's evaluated samples cache by (corpus, resolved query, step,
-  * chunk base), and a repeat or overlapping dashboard request re-renders
+  * splits into fixed-width chunks of its instant grid, each chunk's
+  * evaluated samples cache by (corpus, resolved query, step, evaluated
+  * span), and a repeat or overlapping dashboard request re-renders
   * from cached chunks — only never-seen chunks touch Spark.
   *
   * Soundness rests on PromQL's own evaluation model: every `query_range`
@@ -14,26 +14,24 @@ import org.apache.spark.sql.SparkSession
   * relation — the same fact the sharded grid evaluator relies on), so
   * any instant partition of the grid is result-identical to one plan.
   * Two requests share chunks when their grids align: same step, same
-  * phase (`start mod step`) — the cache key's chunk base carries the
-  * phase by construction.
+  * phase (`start mod step`) — the key's span carries the phase by
+  * construction, and its width keeps split widths apart.
   *
-  * What deliberately does NOT cache:
-  *  - the HEAD chunk — a chunk whose full span would run past the
-  *    corpus instant evaluates only its in-range instants and is never
-  *    stored (Cortex likewise refuses to cache the still-mutable
-  *    current period);
-  *  - nothing keyed on the raw query STRING: the key holds the
-  *    RESOLVED Ast (case-class structural equality), so `@ start()` /
-  *    `@ end()` pins — which resolve against the full request bounds —
-  *    produce distinct keys for distinct ranges instead of poisoned
-  *    hits.
+  * The HEAD chunk (whose full span would run past the corpus instant)
+  * caches too, keyed on the span it evaluates. Cortex treats its head
+  * as still mutable; here it is as fixed as the `time=None` instant
+  * entry: the corpus instant is the persisted 1-row aggregate of the
+  * persisted events, remote writes land in their own segment dir, and
+  * every mutation of the corpus relation bumps the epoch (below).
+  * Nothing keys on the raw query STRING: the key holds the RESOLVED
+  * Ast, so `@ start()`/`@ end()` pins (resolved against the full
+  * request bounds) give distinct ranges distinct keys.
   *
   * INVALIDATION — a cached chunk must never outlive the TSDB state it
   * was computed under:
-  *  - admin mutations (`delete_series` / `clean_tombstones` / reset)
-  *    bump a per-(session, corpus) state EPOCH carried in every key, so
-  *    all prior chunks become unreachable the instant a tombstone lands
-  *    (Cortex invalidates on exactly these paths);
+  *  - admin mutations, `/-/reload`, [[graft.Graft.releaseCaches]] and
+  *    `Materialize.seed` bump a per-(session, corpus) state EPOCH
+  *    carried in every key, so all prior chunks become unreachable;
   *  - the standing recording-rule file travels in the key twice over:
   *    rules are inlined into the Ast BEFORE keying (so a recorded name
   *    caches under its meaning, and shares chunks with its hand-written
@@ -62,7 +60,9 @@ object ResultsCache {
   /** TSDB-state EPOCH per (session, corpus): bumped by every admin
     * mutation that changes what a query may answer —
     * [[Admin.deleteSeries]] (new tombstones), [[Admin.cleanTombstones]]
-    * and [[Admin.reset]] (tombstones change shape or vanish). A cached
+    * and [[Admin.reset]] (tombstones change shape or vanish) — and by
+    * `/-/reload`, `Graft.releaseCaches` and `Materialize.seed` (rules
+    * reloaded, corpus relations released or replaced). A cached
     * chunk's key carries the epoch it was computed under, so a mutation
     * makes every prior chunk unreachable: the next request recomputes
     * against the new state (Cortex invalidates its results cache on
@@ -85,7 +85,7 @@ object ResultsCache {
 
   private final case class Key(dir: String, epoch: Long,
       rules: Map[String, (Ast, Long)], ast: Ast, stepS: Long,
-      chunkBase: Long, msr: Option[Long], nf: Seq[String])
+      lo: Long, hi: Long, msr: Option[Long], nf: Seq[String])
 
   /** Instant-query cache key: the post-inline Ast + the request's
     * explicit `time` (None = the corpus instant — itself fixed for a
@@ -184,7 +184,7 @@ object ResultsCache {
     val phase = Math.floorMod(startS, stepS)
     val span = splitInstants.toLong * stepS
     // the last grid-aligned instant the corpus can serve — a chunk whose
-    // full span runs past it is the still-mutable HEAD (never stored)
+    // full span runs past it is the HEAD, evaluated only up to here
     val lastOk = tCorpus - Math.floorMod(tCorpus - phase, stepS)
     def base(t: Long): Long = t - Math.floorMod(t - phase, span)
     val nfKey = nativeFamilies.toSeq.sorted
@@ -205,24 +205,22 @@ object ResultsCache {
     def stitched(): String = {
       val merged = scala.collection.mutable.HashMap.empty[String, Vector[(Long, String)]]
       (startS to endS by stepS).map(base).distinct.foreach { cb =>
-        val chunkEnd = cb + span - stepS
-        val rows: Chunk =
-          if (chunkEnd <= lastOk) {
-            val key = Key(dir, ep, rulesFp, ast, stepS, cb, maxSourceResS,
-              nfKey)
-            lock.synchronized(Option(lru.get(key))) match {
-              case Some(hit) =>
-                lock.synchronized { hitN += 1 }
-                hit
-              case None =>
-                val fresh = compute(cb, chunkEnd)
-                lock.synchronized { missN += 1; lru.put(key, fresh) }
-                fresh
-            }
-          } else {
-            // head chunk: evaluate only the requested tail, never store
-            compute(math.max(cb, startS), math.min(endS, lastOk))
-          }
+        // key on the span evaluated: a complete chunk's whole width, the
+        // head's requested part up to lastOk
+        val (lo, hi) =
+          if (cb + span - stepS <= lastOk) (cb, cb + span - stepS)
+          else (math.max(cb, startS), math.min(endS, lastOk))
+        val key = Key(dir, ep, rulesFp, ast, stepS, lo, hi, maxSourceResS,
+          nfKey)
+        val rows = lock.synchronized(Option(lru.get(key))) match {
+          case Some(hit) =>
+            lock.synchronized { hitN += 1 }
+            hit
+          case None =>
+            val fresh = compute(lo, hi)
+            lock.synchronized { missN += 1; lru.put(key, fresh) }
+            fresh
+        }
         rows.foreach { case (m, vs) =>
           merged.update(m, merged.getOrElse(m, Vector.empty) ++ vs)
         }

@@ -85,6 +85,10 @@ object Materialize {
       spark.read.parquet(s"$outDir/$NhObs"))
     graft.operators.TextAnalysis.seedBpeDocs(spark, sfDir,
       spark.read.parquet(s"$outDir/$BpeDocs"))
+    // results cached against the replaced relations must not stay
+    // reachable (bumped after the swap, so no chunk of the old ones
+    // can land under the new epoch)
+    graft.promql.ResultsCache.invalidate(spark, sfDir)
   }
 
   def main(args: Array[String]): Unit = {

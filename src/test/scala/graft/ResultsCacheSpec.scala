@@ -7,7 +7,7 @@ import graft.sources.QueryEndpoint
   * chunks, cache complete chunks, stitch — responses BYTE-IDENTICAL to
   * the direct serving path cold and warm, chunk reuse across
   * overlapping requests proven by the hit/miss counters, and the head
-  * (corpus-adjacent) chunk never cached.
+  * (corpus-adjacent) chunk cached on the span it evaluates.
   */
 class ResultsCacheSpec extends SparkTestBase {
   import spark.implicits._
@@ -25,9 +25,14 @@ class ResultsCacheSpec extends SparkTestBase {
   private def direct(q: String, s: Long, e: Long): String =
     Api.queryRangeJson(spark, dir, q, s, e, stepS)
 
-  private def cached(q: String, s: Long, e: Long): String =
+  private def cached(q: String, s: Long, e: Long, split: Int = 4): String =
     ResultsCache.queryRangeJson(spark, dir, q, s, e, stepS,
-      splitInstants = 4)
+      splitInstants = split)
+
+  // the last 6h grid instant the corpus serves (T0 + 90h); at a split
+  // of 3 its chunk [T0 + 84h, T0 + 96h] runs past it — a genuine head
+  private lazy val lastOk: Long =
+    graft.promql.Compiler.instantSeconds(spark, dir).toLong / stepS * stepS
 
   test("cached responses are byte-identical to the direct path, cold and warm") {
     ResultsCache.clear()
@@ -68,19 +73,41 @@ class ResultsCacheSpec extends SparkTestBase {
     assert(h2 >= 2L, "the shared chunks serve from cache")
   }
 
-  test("the head chunk never caches; @ end() pins never cross-poison") {
+  test("split widths never share an entry: 4- then 8-instant chunks") {
     ResultsCache.clear()
-    // range ending ON the corpus instant: the last chunk's full span
-    // runs past the corpus, so it evaluates fresh each time
-    val tCorpus = graft.promql.Compiler.instantSeconds(spark, dir).toLong
-    val e = tCorpus / stepS * stepS
+    // an 8-step chunk base is also a 4-step base: the 8-wide call must
+    // not be served the 4-wide chunk that starts where it does
+    val s = T0 + 4 * stepS
+    val e = s + 7 * stepS
+    for (q <- Seq("purchase", "sum by (k) (rate(purchase[1d]))")) {
+      val want = direct(q, s, e)
+      assert(cached(q, s, e, split = 4) === want, s"4-wide: $q")
+      assert(cached(q, s, e, split = 8) === want, s"8-wide after 4: $q")
+    }
+  }
+
+  test("the head chunk caches on its own span; @ end() pins never cross-poison") {
+    ResultsCache.clear()
+    // range ending ON the corpus instant: chunks at T0 + 48h, 66h and
+    // the head [84h, 90h] of a 3-wide split
+    val e = lastOk
     val s = e - 7 * stepS
     val want = direct("purchase", s, e)
-    assert(cached("purchase", s, e) === want)
-    val (_, m1) = ResultsCache.stats
-    assert(cached("purchase", s, e) === want)
-    val (_, m2) = ResultsCache.stats
-    assert(m2 === m1, "repeat adds no cacheable misses")
+    assert(cached("purchase", s, e, split = 3) === want)
+    val (h1, m1) = ResultsCache.stats
+    assert(m1 === 3L, "two complete chunks and the head compute once")
+    assert(cached("purchase", s, e, split = 3) === want)
+    val (h2, m2) = ResultsCache.stats
+    assert(m2 === m1, "a repeat computes nothing, head included")
+    assert(h2 === h1 + 3, "a repeat serves every chunk from cache")
+    // a later start shortens the head span: its own entry, never the
+    // longer head's (nor the reverse, which would lose instants)
+    assert(cached("purchase", e, e, split = 3) === direct("purchase", e, e))
+    assert(ResultsCache.stats._2 === m2 + 1, "a shorter head is a miss")
+    ResultsCache.clear()
+    assert(cached("purchase", e, e, split = 3) === direct("purchase", e, e))
+    assert(cached("purchase", s, e, split = 3) === want,
+      "a longer head must not be served the shorter head's entry")
     // @ end() resolves per request: two ranges must answer like their
     // own direct twins, not each other's cache
     val q = "sum(purchase @ end())"
@@ -91,28 +118,54 @@ class ResultsCacheSpec extends SparkTestBase {
 
   test("delete_series invalidates cached chunks: warm cache serves fresh tombstone-filtered bytes") {
     ResultsCache.clear()
-    val e = T0 + 2 * 86400L
-    val s = e - 11 * stepS
     val q = "sum by (k) (purchase)"
+    // complete chunks a day before the corpus instant, and a range
+    // whose head chunk ends at it (3-wide split: head [84h, 90h])
+    val ranges = Seq((T0 + 2 * 86400L - 11 * stepS, T0 + 2 * 86400L, 4),
+      (lastOk - 7 * stepS, lastOk, 3))
+    def serve(r: (Long, Long, Int)): String = cached(q, r._1, r._2, r._3)
+    def want(r: (Long, Long, Int)): String = direct(q, r._1, r._2)
+    def misses(): Long = ResultsCache.stats._2
     // warm the cache against the un-tombstoned corpus
-    assert(cached(q, s, e) === direct(q, s, e))
-    val (_, mWarm) = ResultsCache.stats
-    assert(cached(q, s, e) === direct(q, s, e))
-    assert(ResultsCache.stats._2 === mWarm, "fully warm before the delete")
+    for (r <- ranges) assert(serve(r) === want(r))
+    val mWarm = misses()
+    for (r <- ranges) assert(serve(r) === want(r))
+    assert(misses() === mWarm, "fully warm before the delete")
+    assert(want(ranges(1)).contains("\"k\":\"a\""),
+      "the head span must hold the series the delete removes")
     try {
       graft.promql.Admin.deleteSeries(spark, dir, Seq("""purchase{k="a"}"""))
-      val want = direct(q, s, e) // direct path excludes the tombstone
-      assert(want.contains("\"k\":\"b\"") && !want.contains("\"k\":\"a\""))
-      assert(cached(q, s, e) === want,
-        "the cached path must serve the tombstone-filtered answer, not stale chunks")
-      val (_, mAfter) = ResultsCache.stats
-      assert(mAfter > mWarm, "the delete must force recomputation")
+      for (r <- ranges) {
+        val m0 = misses()
+        val w = want(r) // direct path excludes the tombstone
+        assert(!w.contains("\"k\":\"a\""))
+        assert(serve(r) === w,
+          "the cached path must serve the tombstone-filtered answer, not stale chunks")
+        assert(misses() > m0, "the delete must force recomputation")
+      }
+      assert(want(ranges.head).contains("\"k\":\"b\""))
     } finally graft.promql.Admin.reset(spark, dir)
     // reset is itself a state mutation: the pre-delete chunks must NOT
     // come back from the cache either
-    val (_, m0) = ResultsCache.stats
-    assert(cached(q, s, e) === direct(q, s, e))
-    assert(ResultsCache.stats._2 > m0, "reset invalidates too")
+    for (r <- ranges) {
+      val m0 = misses()
+      assert(serve(r) === want(r))
+      assert(misses() > m0, "reset invalidates too")
+    }
+  }
+
+  test("releaseCaches invalidates warm chunks: the next request recomputes") {
+    ResultsCache.clear()
+    val e = lastOk
+    val s = e - 7 * stepS
+    val want = direct("purchase", s, e)
+    assert(cached("purchase", s, e, split = 3) === want)
+    val (h0, m0) = ResultsCache.stats
+    Graft.releaseCaches(spark)
+    assert(cached("purchase", s, e, split = 3) === want)
+    val (h1, m1) = ResultsCache.stats
+    assert(m1 > m0 && h1 === h0,
+      "chunks of a released relation must not serve after releaseCaches")
   }
 
   test("a rule-file change invalidates recorded-name chunks") {
